@@ -14,7 +14,6 @@ expect, then derives each workload's inputs from that base:
   (sql_analytics streams them).
 
 Usage: python3 perfbench/gen.py --seed 7 --out .perfbench_cache/s7
-       [--workload iot_mixed]
 """
 
 from __future__ import annotations
@@ -285,10 +284,8 @@ def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--out", required=True)
-    ap.add_argument("--workload", choices=sorted(PARTS),
-                    help="only this workload's inputs (default: all)")
     a = ap.parse_args()
-    generate(a.seed, a.out, [a.workload] if a.workload else tuple(PARTS))
+    generate(a.seed, a.out)
     return 0
 
 

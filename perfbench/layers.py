@@ -82,6 +82,7 @@ METRICS.update({
     "trace.wall_s": ("s", "lower"),
     "trace.overhead": ("ratio", "lower"),
     "trace.spans": ("count", "lower"),
+    "mem.peak_rss_mb": ("MB", "lower"),
 })
 
 
@@ -91,8 +92,9 @@ def _per(total, n):
 
 def per_layer(wl, tracer, ctx, rounds, traced_wall) -> dict:
     """Every metric of ``METRICS`` as ``{name: (value, unit)}``;
-    ``trace.overhead`` is left for the caller, which times the untraced
-    passes around the traced one."""
+    ``trace.overhead`` and ``mem.peak_rss_mb`` are left for the caller,
+    which times the untraced passes around the traced one and reads the
+    driver's memory after them."""
     m = {k: 0.0 for k in METRICS}
     ops = ctx.ops
     timed = [o for o in ops if o.get("counters") is not None]

@@ -7,9 +7,9 @@ Run from the root of a source checkout. The inputs are generated from
 ``--seed`` (cached per seed under ``.perfbench_cache/``) before anything
 is timed. Then the run:
 
-1. sets up several times (session start, ``workload.prepare``,
-   registration of containers or catalog, one warm-up operation) and
-   reports the median as ``setup_s``;
+1. sets up twice, each time in a fresh driver JVM (session start,
+   ``workload.prepare``, registration of containers or catalog, one
+   warm-up operation) and reports the median as ``setup_s``;
 2. runs the workload's unmeasured priming operations, so timed code is
    mostly compiled code;
 3. repeats the workload's fixed pass of operations until ``--seconds``
@@ -42,8 +42,9 @@ sys.path.insert(0, ROOT)
 
 from perfbench.trace import SparkCounters, TracerError  # noqa: E402
 
-SETUPS = 3
-DRIVER_HEAP = "2g"
+#: set-up rounds per run; each launches a driver JVM, which is most of a
+#: run's time, so a run reports the median (the mean) of two
+SETUPS = 2
 
 
 def _env(work: str) -> None:
@@ -54,14 +55,10 @@ def _env(work: str) -> None:
     os.environ["TMPDIR"] = tmp
     os.environ["SPARK_LOCAL_DIRS"] = os.path.join(work, "spark")
     os.environ.setdefault("SPARK_GRAFT_CPUS", str(os.cpu_count() or 4))
-    os.environ["SPARK_GRAFT_DRIVER_MEM"] = DRIVER_HEAP
     os.environ["PYSPARK_PYTHON"] = sys.executable
-    # a fixed, pre-touched heap: the driver JVM's resident size then does
-    # not depend on when G1 chose to grow the heap, which made peak RSS
-    # swing by ~20% between runs of the same inputs
+    # the driver heap is the engine's own setting (session.py)
     os.environ["PYSPARK_SUBMIT_ARGS"] = (
-        f"--driver-java-options '-Xms{DRIVER_HEAP} -XX:+AlwaysPreTouch "
-        f"-Djava.io.tmpdir={tmp}' "
+        f"--driver-java-options '-Djava.io.tmpdir={tmp}' "
         f"--conf spark.sql.warehouse.dir={os.path.join(work, 'warehouse')} "
         "pyspark-shell")
 
@@ -134,6 +131,21 @@ def _peak_rss_mb(spark) -> float:
     return (hwm_kb + py_kb) / 1024.0
 
 
+def _retained_mb(spark) -> float:
+    """Memory the driver JVM holds after full collections: heap in use
+    plus non-heap in use (metaspace, code cache). Unlike VmHWM it does
+    not depend on how far G1 chose to grow the heap."""
+    mx = spark._jvm.java.lang.management.ManagementFactory.getMemoryMXBean()
+    gc.collect()  # drop Python's handles on JVM objects first
+    for _ in range(3):
+        # objects behind cleaners and weak references are freed only
+        # by the collection after the one that found them unreachable
+        spark._jvm.System.gc()
+        time.sleep(0.3)
+    return (mx.getHeapMemoryUsage().getUsed()
+            + mx.getNonHeapMemoryUsage().getUsed()) / 2**20
+
+
 def _children(pid: int) -> list[int]:
     out = []
     for task in os.listdir(f"/proc/{pid}/task"):
@@ -154,6 +166,8 @@ def _shutdown(spark) -> None:
     spark.stop()
     workers = _children(jvm_pid)
     gw = SparkContext._gateway
+    # the next session start then launches a new JVM
+    SparkContext._gateway = SparkContext._jvm = None
     gw.shutdown()
     gw.proc.stdin.close()  # the JVM exits when its stdin closes
     try:
@@ -183,14 +197,16 @@ def _settle(spark) -> None:
 
 def setup(wl):
     """SETUPS rounds of session start + prepare + registration + warm-up.
-    Returns the live session and the per-round timings."""
+    Each round launches its own driver JVM, so every round pays the JVM
+    start and cold class loading. Returns the live session and the
+    per-round timings."""
     from griddb_spark import workload
     from griddb_spark.session import get_spark
 
     spark, rounds = None, []
     for _ in range(SETUPS):
         if spark is not None:
-            spark.stop()
+            _shutdown(spark)
         t0 = time.perf_counter()
         spark = get_spark("perfbench")
         workload.prepare(spark)
@@ -237,6 +253,7 @@ def traced_pass(wl, spark, tracer, rounds, walls):
     wl.run_pass(after, len(walls) + 1)
     untraced = (walls[-1] + time.perf_counter() - t0) / 2
     metrics["trace.overhead"] = (traced_wall / untraced - 1.0, "ratio")
+    metrics["mem.peak_rss_mb"] = (_peak_rss_mb(spark), "MB")
     return metrics, tctx.ops, after.ops
 
 
@@ -260,7 +277,7 @@ def end_to_end(ctx, walls, rounds, spark) -> dict:
         "read_p90_ms": (ms(reads, 90), "ms"),
         "write_p50_ms": (ms(writes, 50), "ms"),
         "write_p90_ms": (ms(writes, 90), "ms"),
-        "peak_rss_mb": (_peak_rss_mb(spark), "MB"),
+        "retained_mb": (_retained_mb(spark), "MB"),
     }
 
 

@@ -3,12 +3,12 @@ generated inputs, each checked against its ``workload.ORACLE`` SQL in
 DuckDB on the same files.
 
 The pass covers the NewSQL surface over a key-shifted replica of the star
-schema: TPC-H q1-q22, a join, the SQL front end and MATCH_RECOGNIZE,
-with a TPC-H-style refresh stream of inserts and deletes
-between the queries. It then runs a slice of the ``pipeline`` data-prep
-chain on the document and embedding corpus, and two continuous queries
-over the event stream (``stream.py``), so the pipeline and streaming
-layers are measured too.
+schema: TPC-H q1-q22, a join, GROUP BY RANGE, the SQL front end and
+MATCH_RECOGNIZE, with a TPC-H-style refresh stream of inserts and
+deletes between the queries. It then runs a slice of the ``pipeline``
+data-prep chain on the document and embedding corpus, and two continuous
+queries over the event stream (``stream.py``), so the pipeline and
+streaming layers are measured too.
 """
 
 from __future__ import annotations
@@ -33,21 +33,36 @@ TPCH = [
     "q19_disjunctive_revenue", "q20_promotion_parts", "q21_waiting_supplier",
     "q22_global_sales",
 ]
-#: joins, the SQL front end's hints and MATCH_RECOGNIZE. The GROUP BY
-#: RANGE gates are left out: every one of them compares round(avg, 6)
-#: columns, and on inputs whose values carry two decimals some seeds give
-#: a bucket whose average is an exact half-way tie that Spark and DuckDB
-#: round apart (see NOTES.md). The streaming part measures GROUP BY RANGE.
-SQL_OTHER = ["join_inner_5way", "sql_frontend_leading_hint",
-             "sql_frontend_index_join_hint", "match_recognize_spikes"]
+#: joins, GROUP BY RANGE (batch, with FILL, and through the SQL front
+#: end, one with a generated-rows hint) and MATCH_RECOGNIZE
+SQL_OTHER = ["join_inner_5way", "range_hour_none", "range_15m_fill_null",
+             "range_15m_fill_prev", "range_15m_fill_linear",
+             "sql_frontend_group_by_range", "sql_frontend_gen_rows_hint",
+             "sql_frontend_leading_hint", "sql_frontend_index_join_hint",
+             "match_recognize_spikes"]
+#: gate -> {column: relative tolerance}. The GROUP BY RANGE gates compare
+#: round(x, 6) of averages and sums. On values of two decimals a bucket's
+#: exact average can be a half-way tie at the seventh decimal, which
+#: Spark and DuckDB round apart by 1e-6 (see NOTES.md). The averages here
+#: lie far above 10, so 1e-7 admits that one step and nothing more; a
+#: wrong bucket still shows in the exact timestamp and count columns.
+REL_TOL = {
+    "range_hour_none": {"avg_value": 1e-7, "sum_value": 1e-7},
+    "range_15m_fill_null": {"avg_value": 1e-7},
+    "range_15m_fill_prev": {"avg_value": 1e-7},
+    "range_15m_fill_linear": {"avg_value": 1e-7},
+    "sql_frontend_group_by_range": {"av": 1e-7},
+    "sql_frontend_gen_rows_hint": {"avg_value": 1e-7},
+}
 #: a TPC-H-style refresh stream beside the queries: each pass runs
 #: RF_PAIRS pairs of RF1 (a prepared INSERT batch of RF_ROWS new orders
 #: through the SQL front end) and RF2 (a DELETE of the orders that RF1
 #: added) on a durable refresh table seeded with the first orders. Each
 #: write is timed through its read-back. The stream's place among the
 #: queries depends only on the pass number, so every seed runs the same
-#: mix.
-RF_PAIRS = 4
+#: mix. Ten pairs make 20 of a pass's 30 writes, so write_p90_ms does not
+#: rest on the slowest two of the ten micro-batches.
+RF_PAIRS = 10
 RF_ROWS = 10
 RF_SEED_ROWS = 2_000
 
@@ -130,7 +145,8 @@ class SqlAnalytics:
                 return df.columns, [tuple(r) for r in df.collect()]
 
             def check(res, g=g):
-                return compare(res[0], res[1], *self.expected[g])
+                return compare(res[0], res[1], *self.expected[g],
+                               rel_tol=REL_TOL.get(g))
 
             ctx.op(g, "read", op, check)
             if i in rf_at:

@@ -109,6 +109,20 @@ def test_comparator_tolerance_only_where_named():
     assert compare(["k", "s"], a, ["k", "s"], [(1, 100.1)], {"s": 1e-9}) is not None
 
 
+def test_group_by_range_tolerance_admits_one_rounding_step_only():
+    from perfbench.sql import REL_TOL
+
+    tol = REL_TOL["range_15m_fill_null"]
+    cols = ["ts", "avg_value", "n"]
+    # a half-way tie rounded apart at the sixth decimal
+    assert compare(cols, [(0, 45.035312, 32)],
+                   cols, [(0, 45.035313, 32)], tol) is None
+    assert compare(cols, [(0, 45.035312, 32)],
+                   cols, [(0, 45.03532, 32)], tol) is not None
+    assert compare(cols, [(0, 45.035312, 32)],
+                   cols, [(0, 45.035312, 33)], tol) is not None
+
+
 def _digest(root: str) -> dict:
     out = {}
     for d, _, files in os.walk(root):

@@ -74,8 +74,6 @@ SITES = {
     "streaming": [
         "griddb_spark.streaming.stream_ops:read_container_stream",
         "griddb_spark.streaming.stream_ops:group_by_range_stream",
-        "griddb_spark.streaming.stream_ops:dedup_stream",
-        "griddb_spark.streaming.stateful:match_recognize_stream",
     ],
     "pipeline": [
         "griddb_spark.pipeline.quality:c4_line_filter",
@@ -233,5 +231,4 @@ class SparkCounters:
                                   + sd.diskBytesSpilled()) / 2**20
                 c["rows_read"] += sd.inputRecords()
         c["driver_gap_s"] = max(0.0, wall_s - union_length(spans))
-        c["core_util"] = c["task_s"] / (wall_s * self.cores) if wall_s else 0.0
         return c
