@@ -32,8 +32,8 @@ DAY_MS = 86_400_000
 #: seeds differ in the data, not in the mix (a seeded mix swung op p50 by
 #: ~40% between seeds). Short reads hit ~66-row device containers; the
 #: long reads sample a 10^4-row history; there are enough of them that
-#: both read p90 and op p90 land inside their cluster, on the
-#: neighbour-frame cost of the long containers.
+#: both read p90 and op p90 rest mostly on the neighbour-frame cost of
+#: the long containers.
 SHORT_READS = ["get_at", "interpolate", "aggregate", "sample", "query_range",
                "multi_get", "tql_select", "tql_time_avg", "tql_sampling"] * 3
 LONG_READS = ["sample", "tql_sampling"] * 2

@@ -8,6 +8,7 @@ They need no Spark session.
 from __future__ import annotations
 
 import hashlib
+import math
 import os
 import sys
 
@@ -18,23 +19,37 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from perfbench import gen  # noqa: E402
 from perfbench.check import compare  # noqa: E402
 from perfbench.stats import (  # noqa: E402
-    percentile, samples_above, self_time_by_layer, self_times, union_length)
+    beta_cdf, percentile, samples_above, self_time_by_layer, self_times,
+    union_length)
 
 
-def test_percentile_is_nearest_rank():
-    v = list(range(1, 101))  # 1..100
-    assert percentile(v, 50) == 50
-    assert percentile(v, 90) == 90
-    assert percentile(v, 100) == 100
+def test_beta_cdf_matches_closed_forms():
+    for x in (0.1, 0.5, 0.93):
+        assert beta_cdf(3.0, 1.0, x) == pytest.approx(x ** 3, rel=1e-12)
+        assert beta_cdf(1.0, 2.5, x) == pytest.approx(1 - (1 - x) ** 2.5,
+                                                      rel=1e-12)
+    assert beta_cdf(0.5, 0.5, 0.3) == pytest.approx(
+        2 / math.pi * math.asin(math.sqrt(0.3)), rel=1e-12)
+    assert beta_cdf(2.0, 3.0, 0.0) == 0.0
+    assert beta_cdf(2.0, 3.0, 1.0) == 1.0
+
+
+def test_percentile_is_harrell_davis():
+    # n = 3, p = 75: weights from Beta(3, 1), whose CDF is x^3, so the
+    # order statistics weigh 1/27, 7/27 and 19/27
+    assert percentile([30, 10, 20], 75) == pytest.approx(720 / 27)
+    # a symmetric sample's median is its centre
+    assert percentile(list(range(1, 101)), 50) == pytest.approx(50.5)
     assert percentile([7.0], 90) == 7.0
-    # unsorted input, 10 samples: p90 is the 9th smallest
-    assert percentile([5, 1, 9, 3, 7, 2, 8, 4, 6, 10], 90) == 9
+    assert percentile([5.0] * 4, 90) == pytest.approx(5.0)
+    v = [1.0, 2.0, 4.0, 8.0, 100.0]
+    assert min(v) < percentile(v, 50) < percentile(v, 90) < max(v)
 
 
-def test_p90_leaves_ten_samples_above_at_one_hundred():
+def test_samples_above_p90():
     v = [float(i) for i in range(100)]
     assert samples_above(v, 90) == 10
-    assert samples_above(v[:99], 90) < 10
+    assert samples_above(v[:50], 90) == 5
 
 
 def test_percentile_rejects_bad_input():
@@ -42,6 +57,8 @@ def test_percentile_rejects_bad_input():
         percentile([], 50)
     with pytest.raises(ValueError):
         percentile([1.0], 0)
+    with pytest.raises(ValueError):
+        percentile([1.0], 100)
 
 
 def test_union_length_merges_overlaps():
